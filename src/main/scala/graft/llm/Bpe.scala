@@ -149,7 +149,9 @@ object Bpe {
       if (n > gate) Left(wh)
       else {
         val rows = wh.collect().map { r =>
-          (r.getString(r.fieldIndex("word")), r.getLong(r.fieldIndex("cnt")))
+          // any integral count type — the distributed path's sum() widens
+          // Int counts to Long the same way
+          (r.getString(r.fieldIndex("word")), r.getAs[Number]("cnt").longValue)
         }
         Staging.release(wh)
         Right(rows)

@@ -117,7 +117,9 @@ object Wordpiece {
         // Bpe.bestPairLocal, with the likelihood-gain score first
         var best: ((String, String), Long, Double) = null
         pairs.foreach { case (k @ (x, y), pc) =>
-          val score = pc.toDouble / (units(x) * units(y)).toDouble
+          // multiplyExact: overflow fails here as ANSI fails the
+          // distributed path's left_count * right_count
+          val score = pc.toDouble / Math.multiplyExact(units(x), units(y)).toDouble
           val better = best == null || (if (score == best._3) {
             val cx = Bpe.utf8Cmp(x, best._1._1)
             cx < 0 || (cx == 0 && Bpe.utf8Cmp(y, best._1._2) < 0)

@@ -34,8 +34,8 @@ import graft.sinks.Sinks
   * Scale design: partition sizes come from driver-side metadata
   * (listings of candidate dirs only), selection is threshold-based so an
   * already-compact partition is never rewritten, and the rewrite
-  * publishes through the same crash-consistent per-partition staged swap
-  * as the MERGE (`Sinks.swapPartitions` + recovery repair) — a crash
+  * publishes through the same crash-consistent partition commit as the
+  * MERGE (`Sinks.commitPartitions` + `Sinks.recoverPartitions`) — a crash
   * mid-compaction leaves every partition complete-old or complete-new,
   * and compaction is idempotent (re-running selects nothing once
   * partitions are compact; manifests are consumed only after their
@@ -45,7 +45,7 @@ object Compact {
 
   /** Manifest directory under the snapshot root. The underscore prefix
     * keeps it invisible to Spark's file index (same convention as
-    * _SUCCESS), to the partition census, and to swapPartitions. */
+    * _SUCCESS), to the partition census, and to the partition commit. */
   private val ManifestDirName = "_graft_manifest"
 
   /** Record a write-side manifest: one file per MERGE run listing the
@@ -86,8 +86,7 @@ object Compact {
                  batchSize: Int = 16): Seq[String] = {
     val root = new Path(snapshotPath)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    Sinks.recoverPartitionSwaps(spark, snapshotPath)
-    sweepOrphans(fs, snapshotPath)
+    Sinks.recoverPartitions(spark, snapshotPath)
     val dirNames = fs.listStatus(root)
       .filter(st => st.isDirectory && st.getPath.getName.contains("="))
       .map(_.getPath.getName).toSeq
@@ -100,7 +99,7 @@ object Compact {
     * consume exactly the manifest files read (a concurrent MERGE's new
     * manifest is left for the next run). Recovery is scoped the same
     * way — per-named-partition existence probes
-    * (`Sinks.recoverPartitionSwap`), never a root listing: a crashed
+    * (`Sinks.recoverPartitions` with `named`), never a root listing: a crashed
     * compaction's manifests survive (consumed only on success), so its
     * partitions are re-examined and re-repaired by the replay.
     * @return the partition dir names rewritten */
@@ -116,8 +115,7 @@ object Compact {
       .filter(st => st.isFile && st.getPath.getName.startsWith("manifest-"))
       .map(_.getPath).toSeq
     val dirNames = manifestFiles.flatMap(readManifest(fs, _)).distinct
-    dirNames.foreach(Sinks.recoverPartitionSwap(spark, snapshotPath, _))
-    sweepOrphans(fs, snapshotPath)
+    Sinks.recoverPartitions(spark, snapshotPath, Some(dirNames))
     // a manifest-listed dir can be legitimately absent (partition dropped
     // since the write) — skip it rather than failing the census
     val existing = dirNames.filter(n => fs.exists(new Path(s"$snapshotPath/$n")))
@@ -126,16 +124,6 @@ object Compact {
     manifestFiles.foreach(fs.delete(_, false))
     rewritten
   }
-
-  /** A crash mid-compaction orphans its __compact-<uuid> staged dir (the
-    * live snapshot is repaired by swap recovery, but nothing else
-    * references the staging copy) — sweep them on entry, mirroring
-    * Upsert.partitioned's __stage-* sweep, so repeated crashes don't
-    * leak partition copies. (The glob lists the snapshot's PARENT dir,
-    * not the snapshot root.) */
-  private def sweepOrphans(fs: FileSystem, snapshotPath: String): Unit =
-    fs.globStatus(new Path(s"${snapshotPath}__compact-*"))
-      .foreach(st => fs.delete(st.getPath, true))
 
   /** Grouping key for batch assembly: exact schemas that differ only in
     * nullability or field metadata describe logically identical dirs and
@@ -238,12 +226,11 @@ object Compact {
     }.flatMap { case (schema, batch) =>
       def readDir(dirName: String) =
         spark.read.schema(schema).parquet(s"$snapshotPath/$dirName")
-      val stagedPath = s"${snapshotPath}__compact-${java.util.UUID.randomUUID()}"
       // Read each partition DIRECTORY verbatim and restore the staged
       // output under the IDENTICAL dir name. An earlier
       // filter-on-decoded-value + partitionBy round-trip let Spark's
       // partition type inference re-canonicalize the value (y=01 read as
-      // int 1 was rewritten as y=1 — swapPartitions then promoted a new
+      // int 1 was rewritten as y=1 — the swap then promoted a new
       // dir while the old one stayed live, duplicating rows on read) and
       // URL-escaped values (%XX) matched nothing, silently no-op'ing
       // while still being reported as rewritten (CompactSpec pins both).
@@ -289,30 +276,28 @@ object Compact {
           })
           .map(_._2),
         tagged.schema)
-      slotted.drop("__graft_slot")
-        .write.partitionBy("__graft_p").mode("error").parquet(stagedPath)
-      batch.zipWithIndex.foreach { case ((dirName, _, _), i) =>
-        val staged = new Path(s"$stagedPath/__graft_p=$i")
-        if (fs.exists(staged))
-          Sinks.rename(fs, staged, new Path(s"$stagedPath/$dirName"))
-        // A candidate whose files hold zero rows (metadata-only parquet
-        // from empty-frame saves) legitimately emits no staged dir —
-        // publish an empty dir so the swap still collapses its junk
-        // files. But ONLY after re-proving the source is empty: a
-        // missing dir for a partition that HAS rows means the write
-        // lost them, and swapping an empty dir over the live copy would
-        // convert that bug into silent data deletion. Fail loudly
-        // instead — the staged batch is abandoned, the live snapshot
-        // untouched. The probe is per-missing-tag (rare) and
-        // LocalLimit-1 cheap.
-        else if (readDir(dirName).isEmpty) fs.mkdirs(new Path(s"$stagedPath/$dirName"))
-        else throw new java.io.IOException(
-          s"compaction staged no output for non-empty partition $dirName")
+      Sinks.commitPartitions(spark, snapshotPath) { stagedPath =>
+        slotted.drop("__graft_slot")
+          .write.partitionBy("__graft_p").mode("error").parquet(stagedPath)
+        batch.zipWithIndex.foreach { case ((dirName, _, _), i) =>
+          val staged = new Path(s"$stagedPath/__graft_p=$i")
+          if (fs.exists(staged))
+            Sinks.rename(fs, staged, new Path(s"$stagedPath/$dirName"))
+          // A candidate whose files hold zero rows (metadata-only parquet
+          // from empty-frame saves) legitimately emits no staged dir —
+          // publish an empty dir so the swap still collapses its junk
+          // files. But ONLY after re-proving the source is empty: a
+          // missing dir for a partition that HAS rows means the write
+          // lost them, and swapping an empty dir over the live copy would
+          // convert that bug into silent data deletion. Fail loudly
+          // instead — the staged batch is abandoned, the live snapshot
+          // untouched. The probe is per-missing-tag (rare) and
+          // LocalLimit-1 cheap.
+          else if (readDir(dirName).isEmpty) fs.mkdirs(new Path(s"$stagedPath/$dirName"))
+          else throw new java.io.IOException(
+            s"compaction staged no output for non-empty partition $dirName")
+        }
       }
-      // parquet() drops a _SUCCESS marker at the staged dir level; remove
-      // it so swapPartitions sees only the partition dirs
-      fs.delete(new Path(s"$stagedPath/_SUCCESS"), false)
-      Sinks.swapPartitions(spark, stagedPath, snapshotPath)
       batch.map(_._1)
     }
   }

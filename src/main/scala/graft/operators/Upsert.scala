@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.core.Staging
@@ -31,22 +30,11 @@ import graft.sinks.Sinks
   */
 object Upsert {
 
-  /** Source dedup by pk, latest-cursor-wins (deterministic stand-in for
-    * the reference's duplicate pre-check, bigquery.py:227-229). */
-  private def dedupLatest(source: DataFrame, pk: Seq[String],
-                          cursor: String): DataFrame = {
-    val w = Window.partitionBy(pk.map(col): _*)
-      .orderBy(col(cursor).desc_nulls_last)
-    source.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
-      .drop("__rn")
-  }
-
   /** Pure-plan upsert: returns the post-MERGE snapshot DataFrame. */
   def apply(target: DataFrame, source: DataFrame,
             pk: Seq[String], cursor: String): DataFrame = {
     val keyCols = pk.map(col)
-    val dedupedSrc = dedupLatest(source, pk, cursor)
+    val dedupedSrc = Dedup.latestWins(source, pk, cursor)
       .select(target.columns.toIndexedSeq.map(col): _*) // align column order with target
     // WHEN MATCHED AND t.cursor != s.cursor / WHEN NOT MATCHED:
     // keep only source rows that are new, or whose cursor changed. The
@@ -72,8 +60,8 @@ object Upsert {
     * restores that asymmetry for a partitioned snapshot: derive each
     * source row's partition (`partOf`, e.g. `year(cursor)`), read ONLY
     * the touched partitions of the target (partition-pruned scan), run
-    * the same MERGE over that slice, and dynamic-partition-overwrite only
-    * those partitions. An incremental batch touching one day rewrites one
+    * the same MERGE over that slice, and republish only those
+    * partitions. An incremental batch touching one day rewrites one
     * partition of a 100 TB table, and every untouched partition's files
     * are left byte-identical (asserted in UpsertSpec).
     *
@@ -95,17 +83,16 @@ object Upsert {
     * once (graft.core.Staging) so the touched-partition read and the merge
     * don't each re-execute the upstream extract.
     *
-    * Crash consistency: the merged slice is written to a private staging
-    * directory beside the snapshot (which also keeps the write plan's
-    * input set disjoint from the snapshot path it reads), then published
-    * partition-by-partition through `Sinks.swapPartitions` — per-dir
-    * atomic renames, so every touched partition is always either its
-    * complete old or complete new version, never a partial mix. A crash
-    * mid-publish is repaired by `Sinks.recoverPartitionSwaps` on the next
-    * call, and the un-advanced cursor replays the batch; the MERGE's
-    * idempotence makes the replay a no-op on partitions that already
-    * swapped. (The reference gets the same guarantee from BigQuery's
-    * transactional MERGE, config/bigquery/bigquery.py:259-262.)
+    * Crash consistency: the merged slice — on bootstrap (no snapshot
+    * yet), the deduped source itself — is published through
+    * `Sinks.commitPartitions`, per-dir atomic renames, so every touched
+    * partition is always either its complete old or complete new
+    * version, never a partial mix. A crash mid-commit is repaired by
+    * `Sinks.recoverPartitions` on the next call, and the un-advanced
+    * cursor replays the batch; the MERGE's idempotence makes the replay
+    * a no-op on partitions that already swapped. (The reference gets the
+    * same guarantee from BigQuery's transactional MERGE,
+    * config/bigquery/bigquery.py:259-262.)
     *
     * @return the post-merge snapshot re-read from `snapshotPath`
     */
@@ -127,42 +114,24 @@ object Upsert {
     if (fs.exists(new Path(s"${snapshotPath}__current")))
       throw new IllegalStateException(s"'$snapshotPath' uses the marker snapshot " +
         "layout (snapshotSwapMarker); the partitioned MERGE requires the partition-dir layout")
-    if (!fs.exists(new Path(snapshotPath))) {
-      // bootstrap: no target yet — the deduped source IS the snapshot
-      Sinks.overwritePartitions(dedupLatest(src, pk, cursor), snapshotPath,
-        Seq(partCol))
-      // seed the write-side manifest from the bootstrap's own output (a
-      // one-time root listing at table creation, when the listing is the
-      // write we just did) so manifest-driven compaction sees the
-      // initial load's partitions too
-      Compact.writeManifest(spark, snapshotPath,
-        fs.listStatus(new Path(snapshotPath))
-          .filter(st => st.isDirectory && st.getPath.getName.contains("="))
-          .map(_.getPath.getName).toSeq)
-    } else {
-      Sinks.recoverPartitionSwaps(spark, snapshotPath)
-      // staged dirs orphaned by a crashed publish are superseded by this
-      // replay — reclaim them before writing a fresh one
-      fs.globStatus(new Path(s"${snapshotPath}__stage-*"))
-        .foreach(st => fs.delete(st.getPath, true))
-      val touched = src.select(partCol).distinct().collect()
-        .map(_.get(0)).toIndexedSeq
-      val target = spark.read.parquet(snapshotPath)
-        .filter(col(partCol).isin(touched: _*))
-      val stagedPath = s"${snapshotPath}__stage-${java.util.UUID.randomUUID()}"
-      apply(target, src, pk, cursor)
-        .write.partitionBy(partCol).mode("error").parquet(stagedPath)
-      // write-side manifest for the compaction census: the staged dir
-      // names ARE the touched partitions, already in Spark's escaped
-      // dir-name form (re-deriving them from `touched` values would
-      // re-implement the escaping). Recorded BEFORE the swap — if the
-      // swap crashes, the batch replays and the manifest over-approximates
-      // harmlessly; recording after would lose the hint forever.
-      Compact.writeManifest(spark, snapshotPath,
-        fs.listStatus(new Path(stagedPath))
-          .filter(st => st.isDirectory && st.getPath.getName.contains("="))
-          .map(_.getPath.getName).toSeq)
-      Sinks.swapPartitions(spark, stagedPath, snapshotPath)
+    Sinks.recoverPartitions(spark, snapshotPath)
+    val bootstrap = !fs.exists(new Path(snapshotPath))
+    // write-side manifest for the compaction census: the staged dir names
+    // ARE the touched partitions, already in Spark's escaped dir-name
+    // form. Recorded BEFORE the swap — if the swap crashes, the batch
+    // replays and the manifest over-approximates harmlessly; recording
+    // after would lose the hint forever.
+    Sinks.commitPartitions(spark, snapshotPath,
+        Compact.writeManifest(spark, snapshotPath, _)) { staged =>
+      val merged =
+        if (bootstrap) Dedup.latestWins(src, pk, cursor) // the source IS the snapshot
+        else {
+          val touched = src.select(partCol).distinct().collect()
+            .map(_.get(0)).toIndexedSeq
+          apply(spark.read.parquet(snapshotPath).filter(col(partCol).isin(touched: _*)),
+            src, pk, cursor)
+        }
+      merged.write.partitionBy(partCol).mode("error").parquet(staged)
     }
     spark.read.parquet(snapshotPath)
   }

@@ -214,7 +214,7 @@ object Sinks {
     * a PARTIAL mix of old and new files — the failure mode of dynamic
     * partition overwrite's delete-then-commit window. A crash between the
     * two renames leaves that one partition retired-but-not-promoted;
-    * `recoverPartitionSwaps` restores it from the hidden dir on the next
+    * [[recoverPartitions]] restores it from the hidden dir on the next
     * run, and the staged data (never deleted on failure) plus the
     * un-advanced cursor make the batch replayable.
     *
@@ -232,23 +232,79 @@ object Sinks {
     */
   def swapPartitions(spark: SparkSession, stagedPath: String, livePath: String,
                      beforeEach: String => Unit = _ => ()): Unit = {
-    val live = new Path(livePath)
-    val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(live)
-    val parts = fs.listStatus(new Path(stagedPath))
+    val fs = new Path(livePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    publish(fs, stagedPath, livePath, stagedPartitions(fs, stagedPath), beforeEach)
+  }
+
+  /** The `col=value` dir names under a staged path, sorted — the swap
+    * order. Non-partition entries (`_SUCCESS`) are never published. */
+  private def stagedPartitions(fs: org.apache.hadoop.fs.FileSystem,
+                               stagedPath: String): Seq[String] =
+    fs.listStatus(new Path(stagedPath))
       .filter(st => st.isDirectory && st.getPath.getName.contains("="))
-      .map(_.getPath).sortBy(_.getName)
-    parts.foreach { staged =>
-      val name = staged.getName
+      .map(_.getPath.getName).sorted.toSeq
+
+  private def publish(fs: org.apache.hadoop.fs.FileSystem, stagedPath: String,
+                      livePath: String, names: Seq[String],
+                      beforeEach: String => Unit): Unit = {
+    val live = new Path(livePath)
+    fs.mkdirs(live)
+    names.foreach { name =>
       beforeEach(name)
       val target = new Path(live, name)
       val old = new Path(live, OldPartPrefix + name)
       if (fs.exists(old)) fs.delete(old, true) // stale retiree from a crash-after-promote
       if (fs.exists(target)) renameOrFail(fs, target, old)
-      renameOrFail(fs, staged, target)
+      renameOrFail(fs, new Path(stagedPath, name), target)
       fs.delete(old, true)
     }
     fs.delete(new Path(stagedPath), true)
+  }
+
+  /** The partition commit every partitioned writer publishes through
+    * (the MERGE and its bootstrap, compaction, the label folds): `write`
+    * fills the one staged path `<live>__stage-<uuid>` beside the live
+    * snapshot (keeping the write's input set disjoint from the live path
+    * it may read), `beforeSwap` sees the staged `col=value` names before
+    * any of them is visible (the MERGE records its compaction manifest
+    * there), and [[swapPartitions]]' per-dir protocol publishes them.
+    * A crash anywhere leaves every partition complete-old or
+    * complete-new; [[recoverPartitions]] repairs the rest on the next
+    * run.
+    * @return the published partition dir names */
+  def commitPartitions(spark: SparkSession, livePath: String,
+                       beforeSwap: Seq[String] => Unit = _ => ())(
+                       write: String => Unit): Seq[String] = {
+    val fs = new Path(livePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val staged = s"$livePath$StageSuffix${java.util.UUID.randomUUID()}"
+    write(staged)
+    val names = stagedPartitions(fs, staged)
+    beforeSwap(names)
+    publish(fs, staged, livePath, names, _ => ())
+    names
+  }
+
+  /** [[commitPartitions]] stages into `<live>__stage-<uuid>`. */
+  private val StageSuffix = "__stage-"
+
+  /** Start-of-run repair for [[commitPartitions]]: restore partitions a
+    * crash left retired-but-not-promoted, then delete staged dirs a
+    * crashed commit orphaned — they are never adopted, the un-advanced
+    * caller replays instead. `named` scopes the repair to partitions the
+    * caller already knows could have been mid-swap (two existence probes
+    * each instead of a listing of the live root). Assumes one writer per
+    * live path: the sweep reclaims EVERY staged dir beside it.
+    * @return true iff anything was restored or swept (an unclean start) */
+  def recoverPartitions(spark: SparkSession, livePath: String,
+                        named: Option[Seq[String]] = None): Boolean = {
+    val fs = new Path(livePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val restored = named match {
+      case Some(names) => names.count(recoverPartitionSwap(spark, livePath, _)) > 0
+      case None => recoverPartitionSwaps(spark, livePath).nonEmpty
+    }
+    val orphans = fs.globStatus(new Path(s"$livePath$StageSuffix*"))
+    orphans.foreach(st => fs.delete(st.getPath, true))
+    restored || orphans.nonEmpty
   }
 
   /** Repair pass for `swapPartitions` interrupted mid-swap: a hidden
@@ -263,25 +319,15 @@ object Sinks {
     if (!fs.exists(live)) Seq.empty
     else fs.listStatus(live)
       .filter(st => st.isDirectory && st.getPath.getName.startsWith(OldPartPrefix))
-      .toSeq.flatMap { st =>
-        val name = st.getPath.getName.stripPrefix(OldPartPrefix)
-        val target = new Path(live, name)
-        if (fs.exists(target)) { fs.delete(st.getPath, true); Seq.empty }
-        else { renameOrFail(fs, st.getPath, target); Seq(name) }
-      }
+      .map(_.getPath.getName.stripPrefix(OldPartPrefix)).toSeq
+      .filter(recoverPartitionSwap(spark, livePath, _))
   }
 
-  /** Targeted variant of [[recoverPartitionSwaps]] for callers that
-    * already know which partitions could have been mid-swap (the
-    * manifest-driven compaction census): two existence probes per NAMED
-    * partition instead of a listing of the whole live root — the listing
-    * is exactly the O(#partitions) driver walk manifest mode exists to
-    * avoid. Semantics per partition are identical to the full repair
-    * pass: a hidden retiree with no live counterpart is restored, one
-    * with a live counterpart is garbage from a crash-after-promote.
+  /** [[recoverPartitionSwaps]] for one NAMED partition: two existence
+    * probes instead of a listing of the whole live root.
     * @return true iff the partition was restored from its retired copy */
-  def recoverPartitionSwap(spark: SparkSession, livePath: String,
-                           name: String): Boolean = {
+  private def recoverPartitionSwap(spark: SparkSession, livePath: String,
+                                   name: String): Boolean = {
     val live = new Path(livePath)
     val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val old = new Path(live, OldPartPrefix + name)

@@ -339,7 +339,7 @@ object ClusterMaintenance {
     * scale. `Components.merge` then runs over the affected subgraph
     * alone, and the rewrite swaps only the id-buckets (and
     * comp-buckets of the projection) holding updated rows
-    * (`Sinks.swapPartitions` — per-dir atomic, crash-repaired on the
+    * (`Sinks.commitPartitions` — per-dir atomic, crash-repaired on the
     * next fold). Per-batch shuffle is affected-subgraph-sized, not
     * labeling-sized — measured in ShuffleGrowthSpec, and the member
     * pass's input BYTES are measured flat under labeling growth outside
@@ -422,12 +422,8 @@ object ClusterMaintenance {
       // correctly invalidates the projection below)
       StateStore.ensureBucketed(spark, lp, "ib",
         labelsBucketOf(col("id")), stateBuckets)
-      val restored = Sinks.recoverPartitionSwaps(spark, lp)
-      val orphans = fs.globStatus(new Path(lp + "__stage-*"))
-      val unclean = restored.nonEmpty || orphans.nonEmpty
-      orphans.foreach(st => fs.delete(st.getPath, true))
-      fs.globStatus(new Path(cp + "__stage-*"))
-        .foreach(st => fs.delete(st.getPath, true))
+      val unclean = Sinks.recoverPartitions(spark, lp)
+      Sinks.recoverPartitions(spark, cp)
 
       val incidentRaw = edges.select(col("src").as("id"))
         .unionByName(edges.select(col("dst").as("id"))).distinct()
@@ -452,10 +448,10 @@ object ClusterMaintenance {
         // advance the generation FIRST: the projection is not rewritten
         // on this path, and the mismatch is what invalidates it
         StateStore.writeTag(spark, lp, GenTag, newGen())
-        val stagedPath = s"${lp}__stage-${java.util.UUID.randomUUID()}"
-        full.repartition(col("ib")).sortWithinPartitions("id")
-          .write.partitionBy("ib").mode("error").parquet(stagedPath)
-        Sinks.swapPartitions(spark, stagedPath, lp)
+        Sinks.commitPartitions(spark, lp) { staged =>
+          full.repartition(col("ib")).sortWithinPartitions("id")
+            .write.partitionBy("ib").mode("error").parquet(staged)
+        }
       }
       if (incidentN * 5 >= labelsN) { fullMergeSwap(); return }
       // delta path from here on: the incident set has three consumers
@@ -558,12 +554,12 @@ object ClusterMaintenance {
       val keep = StateStore.readPacked(spark, lp)
         .filter(col("ib").isin(touched: _*))
         .join(broadcast(updated.select("id")), Seq("id"), "left_anti")
-      val stagedPath = s"${lp}__stage-${java.util.UUID.randomUUID()}"
-      keep.select("id", "comp", "ib")
-        .unionByName(updated.select("id", "comp", "ib"))
-        .repartition(col("ib")).sortWithinPartitions("id")
-        .write.partitionBy("ib").mode("error").parquet(stagedPath)
-      Sinks.swapPartitions(spark, stagedPath, lp)
+      Sinks.commitPartitions(spark, lp) { staged =>
+        keep.select("id", "comp", "ib")
+          .unionByName(updated.select("id", "comp", "ib"))
+          .repartition(col("ib")).sortWithinPartitions("id")
+          .write.partitionBy("ib").mode("error").parquet(staged)
+      }
       // projection delta — only while the projection is live: rows LEAVE
       // via their old comp's bucket (known from the affected set) and
       // ENTER via their new comp's; swap exactly those comp-buckets. An
@@ -579,23 +575,20 @@ object ClusterMaintenance {
         val keepC = StateStore.readPacked(spark, cp)
           .filter(col("cb").isin(touchedC: _*))
           .join(broadcast(updated.select("id")), Seq("id"), "left_anti")
-        val stagedC = s"${cp}__stage-${java.util.UUID.randomUUID()}"
-        keepC.select("id", "comp", "cb")
-          .unionByName(updatedC.select("id", "comp", "cb"))
-          .repartition(col("cb")).sortWithinPartitions("comp")
-          .write.partitionBy("cb").mode("error").parquet(stagedC)
+        val written = Sinks.commitPartitions(spark, cp) { staged =>
+          keepC.select("id", "comp", "cb")
+            .unionByName(updatedC.select("id", "comp", "cb"))
+            .repartition(col("cb")).sortWithinPartitions("comp")
+            .write.partitionBy("cb").mode("error").parquet(staged)
+        }.toSet
         // a comp-bucket can EMPTY OUT entirely (every member moved to a
         // merged comp in another bucket): the staged write then produces
-        // no dir for it and swapPartitions would leave the stale one —
-        // capture which touched buckets the stage actually wrote, and
-        // drop the rest after the swap. A crash in between leaves the
-        // generation tag unwritten, so the stale projection rebuilds.
-        val stagedDirs = fs.listStatus(new Path(stagedC))
-          .filter(_.isDirectory).map(_.getPath.getName).toSet
-        Sinks.swapPartitions(spark, stagedC, cp)
+        // no dir for it and the commit leaves the stale one — drop every
+        // touched bucket the commit did not publish. A crash in between
+        // leaves the generation tag unwritten, so the stale projection
+        // rebuilds.
         touchedC.foreach { b =>
-          if (!stagedDirs.contains(s"cb=$b"))
-            fs.delete(new Path(cp, s"cb=$b"), true)
+          if (!written.contains(s"cb=$b")) fs.delete(new Path(cp, s"cb=$b"), true)
         }
         StateStore.writeTag(spark, cp, GenTag, gNew)
       }

@@ -100,7 +100,7 @@ object StreamingSync {
     * is safe end-to-end: the MERGE is idempotent per batch, and the
     * per-partition swap commit is crash-consistent —
     * `Upsert.partitioned` repairs an interrupted publish before merging
-    * (Sinks.recoverPartitionSwaps), so a batch that died mid-commit
+    * (Sinks.recoverPartitions), so a batch that died mid-commit
     * replays onto an intact snapshot.
     *
     * Partition-dir layout ONLY: a snapshot published under

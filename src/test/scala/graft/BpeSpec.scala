@@ -52,6 +52,20 @@ class BpeSpec extends SparkSpec {
     assert(s("hugs") === Seq("hug", "s"))
   }
 
+  test("an IntegerType cnt histogram trains the same merges on both sides of the gate") {
+    val words = Seq("hug" -> 10, "pug" -> 5, "pun" -> 12, "bun" -> 4, "hugs" -> 5)
+    def merges(s: org.apache.spark.sql.SparkSession) =
+      Bpe.train(s.createDataFrame(words).toDF("word", "cnt"), 3)._1
+        .orderBy("step").collect().map(_.toSeq).toSeq
+    // the gate override rides a separate session, leaving the shared
+    // session's conf untouched
+    val distributed = spark.newSession()
+    distributed.conf.set("spark.graft.tokenizer.driverTrainRows", "0")
+    val want = Seq(Seq(1, "u", "g", 20L), Seq(2, "u", "n", 16L), Seq(3, "h", "ug", 15L))
+    assert(merges(spark) === want, "driver-resident loop (default gate)")
+    assert(merges(distributed) === want, "distributed loop (driverTrainRows=0)")
+  }
+
   test("greedy left-to-right semantics on repeated-symbol runs") {
     // (a,a) dominates: "aaaa" -> [aa, aa] (even run), "aaa" -> [aa, a]
     // (odd run — the overlap case a sloppy window formulation miscounts)

@@ -150,7 +150,7 @@ class CompactSpec extends SparkSpec {
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {
       // suites share one SparkSession and sbt runs them in parallel, so
       // count only THIS test's COMPACTION writes: the batch rewrite is
-      // the only writer into a __compact-* staging dir under tmp. A
+      // the only writer into a __stage-* staging dir under tmp. A
       // tmp-only filter also matched this test's own setup appends —
       // listener events are delivered async, so under full-suite load
       // the last setup append's event could land after registration and
@@ -160,7 +160,7 @@ class CompactSpec extends SparkSpec {
                              durationNs: Long): Unit = qe.logical match {
         case c: org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
             if c.outputPath.toString.contains(tmp) &&
-              c.outputPath.toString.contains("__compact-") =>
+              c.outputPath.toString.contains("__stage-") =>
           writes.incrementAndGet()
         case _ => ()
       }
@@ -245,7 +245,7 @@ class CompactSpec extends SparkSpec {
                              durationNs: Long): Unit = qe.logical match {
         case c: org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
             if c.outputPath.toString.contains(tmp) &&
-              c.outputPath.toString.contains("__compact-") =>
+              c.outputPath.toString.contains("__stage-") =>
           writes.incrementAndGet()
         case _ => ()
       }
@@ -490,23 +490,23 @@ class CompactSpec extends SparkSpec {
       "the next merge starts a fresh manifest set")
   }
 
-  // regression: a crash between staging and swap orphans the __compact-*
-  // copy; re-running must sweep it (mirroring Upsert's __stage-* sweep)
-  // instead of leaking a full partition copy per crash
-  test("re-run after a crash mid-compaction sweeps __compact-* orphans") {
+  // regression: a crash between staging and swap orphans the __stage-*
+  // copy; re-running must sweep it instead of leaking a full partition
+  // copy per crash
+  test("re-run after a crash mid-compaction sweeps __stage-* orphans") {
     val tmp = java.nio.file.Files.createTempDirectory("graft-compact-crash").toString
     val snap = s"$tmp/snap"
     Seq(("k1", "01", 1.0)).toDF("id", "y", "v")
       .write.partitionBy("y").mode("append").parquet(snap)
 
     // simulate the crash artifact: a staged copy that was never swapped
-    val orphan = new java.io.File(s"${snap}__compact-deadbeef/y=01")
+    val orphan = new java.io.File(s"${snap}__stage-deadbeef/y=01")
     assert(orphan.mkdirs())
     java.nio.file.Files.write(orphan.toPath.resolve("part-00000-orphan.parquet"),
       Array[Byte](1, 2, 3))
 
     assert(Compact.partitions(spark, snap, maxFilesPerPartition = 4) === Seq.empty)
-    assert(!new java.io.File(s"${snap}__compact-deadbeef").exists(),
+    assert(!new java.io.File(s"${snap}__stage-deadbeef").exists(),
       "the orphaned staged copy must be swept on entry")
     assert(spark.read.parquet(snap).count() === 1, "live data untouched")
   }

@@ -202,6 +202,34 @@ class UpsertSpec extends SparkSpec {
     assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$snap/.graft-old-y=2022")))
   }
 
+  test("bootstrap after a crashed bootstrap sweeps its orphaned stage dir") {
+    import org.apache.spark.sql.functions.year
+    val tmp = java.nio.file.Files.createTempDirectory("graft-bootcrash").toString
+    val partOf = year($"updated_at")
+    val seed = Seq(
+      ("a", ts("2022-06-01 00:00:00"), 1.0),
+      ("b", ts("2023-06-01 00:00:00"), 2.0),
+      ("b", ts("2023-05-01 00:00:00"), 9.0)
+    ).toDF("id", "updated_at", "v")
+    val reference = s"$tmp/reference"
+    Upsert.partitioned(reference, seed, Seq("id"), "updated_at", "y", partOf)
+
+    // the crash artifact: a bootstrap's staged output, never published,
+    // and no live snapshot
+    val snap = s"$tmp/snap"
+    val orphan = new java.io.File(s"${snap}__stage-crashed")
+    seed.withColumn("y", partOf).write.partitionBy("y").mode("error").parquet(orphan.toString)
+    assert(!new java.io.File(snap).exists())
+
+    Upsert.partitioned(snap, seed, Seq("id"), "updated_at", "y", partOf)
+    assert(!orphan.exists(), "the orphaned staged dir must be swept by the bootstrap")
+    def rows(path: String) = spark.read.parquet(path).collect().map(_.toSeq).toSet
+    def partDirs(path: String) = partFileHashes(path).keys.map(_.takeWhile(_ != '/')).toSet
+    assert(rows(snap) === rows(reference))
+    assert(partDirs(snap) === partDirs(reference))
+    assert(rows(snap).size === 2, "the bootstrap dedups its source")
+  }
+
   test("partitioned upsert is idempotent per batch") {
     val tmp = java.nio.file.Files.createTempDirectory("graft-partup2").toString
     val snap = s"$tmp/snap"

@@ -122,6 +122,23 @@ class WordpieceSpec extends SparkSpec {
     }
   }
 
+  test("a unit-count product overflowing Long fails on both trainer paths") {
+    // every count sum stays exact at 2^62; only the score's denominator
+    // left_count * right_count = 2^124 overflows. A second pair makes the
+    // distributed best-pair cut compare (and so evaluate) its scores.
+    val words = Map("ab" -> (1L << 62), "cd" -> 1L)
+    for (trainer <- Seq[(org.apache.spark.sql.DataFrame, Int) =>
+        (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame)](
+        (df, s) => Wordpiece.train(df, s),
+        (df, s) => Wordpiece.trainDistributed(df, s))) {
+      // the distributed path's ANSI error may arrive wrapped in a
+      // job-failure exception
+      val e = intercept[Exception](trainDistributed(words, 1, trainer))
+      val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+      assert(chain.exists(_.isInstanceOf[ArithmeticException]), s"got $e")
+    }
+  }
+
   test("likelihood scoring differs from frequency scoring where it should") {
     // 'q' is rare but ALWAYS followed by 'u' (score 1/count(u));
     // 'a'-'##b' is frequent but both units are everywhere. WordPiece
